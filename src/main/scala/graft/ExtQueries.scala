@@ -84,47 +84,31 @@ object ExtQueries {
       |  SELECT doc_id + 10000 AS doc_id, text FROM documents
       |  WHERE doc_id < 50""".stripMargin
 
-  /** Connected components of the minhash-0.8 near-dup graph over
-    * [[clonedDocs]] — computed ONCE per (session, fixture dir) and
-    * shared by the four CC-family queries (`x_dedup_cc` /
-    * `x_dedup_resolve` / `x_dedup_sizes` / `x_split_leakage`). The
-    * candidate pipeline (tokenize → signatures → band join) plus the
-    * iterative closure is the most expensive subtree in the suite, and
-    * within a session its input is immutable, so each consumer
-    * recomputing it was pure waste; at corpus scale it is the
-    * difference between one and four full near-dup passes. The
-    * returned frame is checkpoint-backed (connectedComponents
-    * materializes its fixpoint), so reuse replays no lineage. */
-  private val ccCache = graft.engine.SessionCaches.register(
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), DataFrame]())
-  private val stagesCache = graft.engine.SessionCaches.register(
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), DedupOps.RepStages]())
-
-  /** The rep-grain MinHash stages under the cloned corpus,
-    * session-cached: the CC family consumes the closure, the LPA
-    * community query the weighted supernode vote — both now run at
-    * REPRESENTATIVE grain (r13 verdict ask #1: the clone-expanded pair
-    * set carried ~100× the edges of the rep graph for answers that are
-    * a deterministic function of the rep graph plus class sizes), and
-    * both start from this one shared LSH pipeline. Frames inside are
-    * materialized (checkpoint-backed), so each consumer replays no
-    * lineage. */
+  /** The rep-grain MinHash stages under the cloned corpus: the CC
+    * family consumes the closure, the LPA community and PageRank
+    * queries the weighted supernode vote — all at REPRESENTATIVE grain
+    * (r13 verdict ask #1: the clone-expanded pair set carried ~100× the
+    * edges of the rep graph for answers that are a deterministic
+    * function of the rep graph plus class sizes). The rep pairs are
+    * materialized: the LPA and PageRank queries read them for the node
+    * set and again in every round. */
   private def clonedDocStages(s: SparkSession,
-                              dir: String): DedupOps.RepStages =
-    graft.engine.SessionCaches.memo(stagesCache, (s, dir))( {
-      val st = DedupOps.minhashRepStages(clonedDocs(s, dir), "doc_id",
-        "text", shingleN = 2, numPerm = 64, bands = 16, threshold = 0.8)
-      DedupOps.RepStages(st.classes, st.shing,
-        graft.engine.Engine.materialize(st.repPairs))
-    })
+                              dir: String): DedupOps.RepStages = {
+    val st = DedupOps.minhashRepStages(clonedDocs(s, dir), "doc_id",
+      "text", shingleN = 2, numPerm = 64, bands = 16, threshold = 0.8)
+    DedupOps.RepStages(st.classes, st.shing,
+      graft.engine.Engine.materialize(st.repPairs))
+  }
 
+  /** Connected components of the minhash-0.8 near-dup graph over
+    * [[clonedDocs]] (`x_dedup_cc` / `x_dedup_resolve` /
+    * `x_dedup_sizes` / `x_split_leakage` and the cohesion audit). The
+    * returned frame is checkpoint-backed (connectedComponents
+    * materializes its fixpoint). */
   private def clonedDocsComponents(s: SparkSession,
                                    dir: String): DataFrame =
-    graft.engine.SessionCaches.memo(ccCache, (s, dir))(
-      DedupOps.componentsFromStages(clonedDocStages(s, dir),
-        threshold = 0.8))
+    DedupOps.componentsFromStages(clonedDocStages(s, dir),
+      threshold = 0.8)
 
   // ---------------------------------------------------------------------
   // Exact dedup: hash-groupBy on the md5 text fingerprint, keep min id.
@@ -442,32 +426,31 @@ object ExtQueries {
   // reproduces exactly in DuckDB. Same output shape as the exact
   // baseline, so a user can swap ANN layouts without code changes.
   // ---------------------------------------------------------------------
-  /** Session-cached PERSISTED ANN index over the embeddings fixture:
-    * the first sim-family query trains the sampled-quantizer state and
-    * writes it to a state dir ([[graft.jobs.AnnIndexJob]]); the state
-    * served to every query is then the LOADED one (quantizer + codes
-    * read back from parquet), so the x_sim_ivf / x_sim_pq /
-    * x_sim_ivfadc oracle rows certify search-off-loaded-index
-    * end-to-end — cross-run reuse at daily cadence is the same load
-    * path with a persistent stateDir (JobsSpec pins load == retrain
-    * bit-equality). */
-  private val annCache = graft.engine.SessionCaches.register(
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), SimilarityOps.AnnIndexState]())
-
+  /** PERSISTED ANN index over the embeddings fixture: each sim-family
+    * query trains the sampled-quantizer state, writes it to a state dir
+    * ([[graft.jobs.AnnIndexJob]]) and searches the LOADED state
+    * (quantizer + codes read back from parquet), so the x_sim_ivf /
+    * x_sim_pq / x_sim_ivfadc oracle rows certify
+    * search-off-loaded-index end-to-end — cross-run reuse at daily
+    * cadence is the same load path with a persistent stateDir (JobsSpec
+    * pins load == retrain bit-equality). The loaded codes scan the
+    * state dir lazily, so it lives until the JVM exits: the Hadoop
+    * FileSystem deletes it when its cache closes at shutdown. */
   private def annState(s: SparkSession,
-                       dir: String): SimilarityOps.AnnIndexState =
-    graft.engine.SessionCaches.memo(annCache, (s, dir))( {
-      val stateDir = java.nio.file.Files
-        .createTempDirectory("graft-ann-state").toString
-      val emb = t(s, dir, "embeddings")
-      graft.jobs.AnnIndexJob.loadOrTrain(s, emb, stateDir,
-        "vec_id", "embedding", dim = 64) // train + persist
-      val (loaded, wasLoaded) = graft.jobs.AnnIndexJob.loadOrTrain(s,
-        emb, stateDir, "vec_id", "embedding", dim = 64)
-      assert(wasLoaded, "ann state must load from the persisted key")
-      loaded
-    })
+                       dir: String): SimilarityOps.AnnIndexState = {
+    val stateDir = java.nio.file.Files
+      .createTempDirectory("graft-ann-state").toString
+    val statePath = new org.apache.hadoop.fs.Path(stateDir)
+    statePath.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .deleteOnExit(statePath)
+    val emb = t(s, dir, "embeddings")
+    graft.jobs.AnnIndexJob.loadOrTrain(s, emb, stateDir,
+      "vec_id", "embedding", dim = 64) // train + persist
+    val (loaded, wasLoaded) = graft.jobs.AnnIndexJob.loadOrTrain(s,
+      emb, stateDir, "vec_id", "embedding", dim = 64)
+    assert(wasLoaded, "ann state must load from the persisted key")
+    loaded
+  }
 
   def xSimIvf(s: SparkSession, dir: String): DataFrame = {
     val emb = t(s, dir, "embeddings")
@@ -1335,7 +1318,7 @@ object ExtQueries {
   // Cluster-cohesion audit (DedupOps.clusterCohesion): per multi-member
   // near-dup cluster, min/mean pairwise Jaccard among members — the
   // "did transitive closure over-merge by chaining" alarm. Clusters
-  // come from the same cached minhash-0.8 component closure as
+  // come from the same minhash-0.8 component closure as
   // x_dedup_cc; the twin re-derives them recursively and replays the
   // pair algebra in integer ppm.
   // ---------------------------------------------------------------------
@@ -1381,37 +1364,10 @@ object ExtQueries {
   // affordable in DuckDB at sf0.01, and a semantically independent
   // check that the blocked candidate set loses no pair.
   // ---------------------------------------------------------------------
-  /** Customer-name (_id, _s) relation + the MATERIALIZED verified
-    * edit-1 pair stage, session-cached: the pair stage (deletion-
-    * variant explode → bucket join → levenshtein verify) is the
-    * expensive subtree both fuzzy queries consume, and within a
-    * session its input is immutable — the clonedDocStages discipline
-    * applied to the fuzzy family. */
-  /** Like stagesCache: keyed on (session, dir) with NO invalidation —
-    * sound under the bench's immutable-input discipline, but a
-    * mid-session rewrite of the customer table (this engine ships Dml
-    * rewrite sinks) would serve stale pairs, and entries live until
-    * session close. Library use outside the bench should clear on
-    * table rewrite (r16 advice note). */
-  private val fuzzyCache = graft.engine.SessionCaches.register(
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), (DataFrame, DataFrame)]())
-
-  private def fuzzyStages(s: SparkSession,
-                          dir: String): (DataFrame, DataFrame) =
-    graft.engine.SessionCaches.memo(fuzzyCache, (s, dir))( {
-      val strs = t(s, dir, "customer")
-        .filter(col("c_name").isNotNull)
-        .select(col("c_custkey").as("_id"), col("c_name").as("_s"))
-      (strs, graft.engine.Engine.materialize(
-        DedupOps.fuzzyStrPairsEdit1(strs)))
-    })
-
-  def xFuzzyMatch(s: SparkSession, dir: String): DataFrame = {
-    val (strs, pairs) = fuzzyStages(s, dir)
-    DedupOps.fuzzyPairsEdit1RepFrom(strs, pairs)
+  def xFuzzyMatch(s: SparkSession, dir: String): DataFrame =
+    DedupOps.fuzzyPairsEdit1Rep(t(s, dir, "customer"), "c_custkey",
+        "c_name")
       .orderBy(col("str_a"), col("str_b"))
-  }
 
   val xFuzzyMatchSql: String =
     """WITH s AS (SELECT c_name AS str, CAST(COUNT(*) AS BIGINT) AS n
@@ -1428,8 +1384,13 @@ object ExtQueries {
   // multi-member clone classes) with member count and minimum id.
   // ---------------------------------------------------------------------
   def xFuzzyClasses(s: SparkSession, dir: String): DataFrame = {
-    val (strs, pairs) = fuzzyStages(s, dir)
-    DedupOps.fuzzyClassesEdit1From(strs, pairs)
+    val strs = t(s, dir, "customer")
+      .filter(col("c_name").isNotNull)
+      .select(col("c_custkey").as("_id"), col("c_name").as("_s"))
+    // Materialized: the class map reads the verified pair stage once
+    // per endpoint side.
+    DedupOps.fuzzyClassesEdit1From(strs, graft.engine.Engine.materialize(
+        DedupOps.fuzzyStrPairsEdit1(strs)))
       .orderBy(col("str"))
   }
 
@@ -1616,28 +1577,17 @@ object ExtQueries {
   // survivors carry their split; rows dropped mid-pipeline are absent.
   // ---------------------------------------------------------------------
   /** The src0-trained bigram LM and the docs-10..19 benchmark gram
-    * hashes, session-cached: x_stream_ingest and x_curation train the
-    * IDENTICAL literal structures (same slice, same params), and each
-    * training is a full corpus-slice pass collected to the driver —
-    * the lmSumsCache discipline (r17 verdict ask #2: "share the
-    * Bloom/LM literal structures already built for the batch ops").
-    * Warm hits surface in the bench artifact via SessionCaches. */
-  private val lmSrc0Cache = graft.engine.SessionCaches.register(
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), TextOps.LmModel]())
+    * hashes: x_stream_ingest and x_curation train the IDENTICAL literal
+    * structures (same slice, same params), each a corpus-slice pass
+    * collected to the driver. */
   private def lmSrc0(s: SparkSession, dir: String): TextOps.LmModel =
-    graft.engine.SessionCaches.memo(lmSrc0Cache, (s, dir))(
-      TextOps.lmTrainHashed(
-        t(s, dir, "documents").filter(col("source") === "src0"), "text"))
+    TextOps.lmTrainHashed(
+      t(s, dir, "documents").filter(col("source") === "src0"), "text")
 
-  private val benchGramsCache = graft.engine.SessionCaches.register(
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), Array[Long]]())
   private def benchGrams(s: SparkSession, dir: String): Array[Long] =
-    graft.engine.SessionCaches.memo(benchGramsCache, (s, dir))(
-      DedupOps.benchmarkGramHashes(
-        t(s, dir, "documents")
-          .filter(col("doc_id") >= 10 && col("doc_id") < 20), "text"))
+    DedupOps.benchmarkGramHashes(
+      t(s, dir, "documents")
+        .filter(col("doc_id") >= 10 && col("doc_id") < 20), "text")
 
   def xStreamIngest(s: SparkSession, dir: String): DataFrame = {
     import graft.jobs.StreamIngestJob
@@ -2215,19 +2165,14 @@ object ExtQueries {
   // ---------------------------------------------------------------------
   private val (bpeRounds, bpeWindow) = (16, 40)
 
-  /** Trained merge table, computed ONCE per (session, dir) and shared
-    * by the three tokenizer-chain queries (`x_text_bpe_encode` /
-    * `x_text_fertility` both re-applied the full driver-loop trainer —
-    * the ccCache argument, for the second-most-expensive subtree). */
-  private val bpeCache = graft.engine.SessionCaches.register(
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), Seq[String]]())
+  /** Trained merge table of the tokenizer-chain queries
+    * (`x_text_bpe_encode` / `x_text_fertility`), collected in rank
+    * order for the encoder. */
   private def trainedMerges(s: SparkSession, dir: String): Seq[String] =
-    graft.engine.SessionCaches.memo(bpeCache, (s, dir))(
-      TextOps.bpeMergesBatched(t(s, dir, "documents"), "text",
-          rounds = bpeRounds, window = bpeWindow)
-        .orderBy(col("merge_rank"))
-        .select(col("pair")).collect().map(_.getString(0)).toSeq)
+    TextOps.bpeMergesBatched(t(s, dir, "documents"), "text",
+        rounds = bpeRounds, window = bpeWindow)
+      .orderBy(col("merge_rank"))
+      .select(col("pair")).collect().map(_.getString(0)).toSeq
 
   def xTextBpe(s: SparkSession, dir: String): DataFrame =
     TextOps.bpeMergesBatched(t(s, dir, "documents"), "text",
@@ -2327,8 +2272,8 @@ object ExtQueries {
 
   // ---------------------------------------------------------------------
   // Tokenizer fertility report: per source, subwords-per-word and
-  // chars-per-subword of the TRAINED tokenizer (the merge table is the
-  // bpeCache one the encode query shares) — the metric that decides
+  // chars-per-subword of the TRAINED tokenizer (the merge table the
+  // encode query trains) — the metric that decides
   // whether a vocabulary is big enough for a corpus slice before a
   // training run prices it in. Integer-ppm ratios; docs that tokenize
   // to nothing count toward n_docs/n_chars but contribute no words.
@@ -2674,24 +2619,17 @@ object ExtQueries {
   // The threshold form (x_text_ppl_thresh) is the other 100 TB cut.
   // ---------------------------------------------------------------------
   /** Materialized DOC-grain LM sums `(_id, _sfx, n_bigrams)` (train on
-    * src0, score all — the x_text_lmscore framing), session-cached:
-    * FOUR registered queries consume the identical train/join/score
-    * chain (`x_text_lmscore`, `x_text_ppl_buckets`, `x_text_ppl_thresh`
-    * at doc grain; `x_mix_weights`/`x_mix_allocate` regroup the exact
-    * integer sums to source grain), and within a session the corpus is
-    * immutable — the ccCache/bpeCache argument applied to the
-    * third-most-expensive subtree (the r16 sf10 sweep priced the chain
-    * at ~23 s per consumer). Checkpoint-backed, so reuse replays no
-    * lineage. */
-  private val lmSumsCache = graft.engine.SessionCaches.register(
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), DataFrame]())
-  private def lmDocSums(s: SparkSession, dir: String): DataFrame =
-    graft.engine.SessionCaches.memo(lmSumsCache, (s, dir))( {
-      val d = t(s, dir, "documents")
-      graft.engine.Engine.materialize(TextOps.lmKeySums(
-        d, d.filter(col("source") === "src0"), "doc_id", "text"))
-    })
+    * src0, score all — the x_text_lmscore framing): the train/join/score
+    * chain behind `x_text_lmscore`, `x_text_ppl_buckets` and
+    * `x_text_ppl_thresh` at doc grain, and `x_mix_weights` /
+    * `x_mix_allocate`, which regroup the exact integer sums to source
+    * grain. Checkpoint-backed: the mixture weights read the sums twice
+    * (corpus totals and the per-source rows). */
+  private def lmDocSums(s: SparkSession, dir: String): DataFrame = {
+    val d = t(s, dir, "documents")
+    graft.engine.Engine.materialize(TextOps.lmKeySums(
+      d, d.filter(col("source") === "src0"), "doc_id", "text"))
+  }
   private def lmScoredDocs(s: SparkSession, dir: String): DataFrame =
     TextOps.lmScoreFromSums(lmDocSums(s, dir), "doc_id")
 
@@ -3526,7 +3464,7 @@ object ExtQueries {
   // identical chain between the two queries by construction).
   // ---------------------------------------------------------------------
   def xMixWeights(s: SparkSession, dir: String): DataFrame = {
-    // Regroup the cached DOC-grain sums to source grain: bigrams map
+    // Regroup the DOC-grain sums to source grain: bigrams map
     // 1:1 to (doc → source), and the fixed-point sums are exact longs,
     // so Σ_docs-of-source equals the direct source-grain aggregation
     // bit-for-bit (the lmKeySums contract).
@@ -3595,19 +3533,14 @@ object ExtQueries {
   // twin re-derives the weights (the x_mix_weights chain verbatim as a
   // CTE) and replays the quota/remainder integer algebra in HUGEINT.
   // ---------------------------------------------------------------------
-  private val mixCache = graft.engine.SessionCaches.register(
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), Seq[(String, Long)]]())
-  /** Collected (source, weight_ppm) rows of [[xMixWeights]], cached
-    * per (session, dir) — the weight table is driver-scale by the
-    * mixtureWeights contract, so the allocator rides one collection
-    * instead of re-running the corpus LM chain (the bpeCache argument
-    * applied to the chain's second consumer). */
+  /** Collected (source, weight_ppm) rows of [[xMixWeights]] — the
+    * weight table is driver-scale by the mixtureWeights contract, so
+    * the allocator's passes read a local relation instead of re-running
+    * the corpus LM chain. */
   private def mixWeightRows(s: SparkSession,
                             dir: String): Seq[(String, Long)] =
-    graft.engine.SessionCaches.memo(mixCache, (s, dir))(
-      xMixWeights(s, dir).select(col("source"), col("weight_ppm"))
-        .collect().map(r => (r.getString(0), r.getLong(1))).toSeq)
+    xMixWeights(s, dir).select(col("source"), col("weight_ppm"))
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
 
   def xMixAllocate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -4365,19 +4298,13 @@ object ExtQueries {
   // retrains the identical counts on token strings and replays the
   // ln/floor algebra bit-for-bit.
   // ---------------------------------------------------------------------
-  /** NB-scored corpus, computed ONCE per (session, dir) and shared by
-    * `x_quality_nb` and `x_quality_auc` (the ccCache/bpeCache
-    * argument: the scoring chain is the expensive subtree and its
-    * input is immutable within a session). Checkpoint-backed, so
-    * reuse replays no lineage. */
-  private val nbCache = graft.engine.SessionCaches.register(
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), DataFrame]())
+  /** NB-scored corpus behind the `x_quality_*` family.
+    * Checkpoint-backed: `x_quality_auc`'s contiguous rank reads it once
+    * to sample the range bounds and again to rank. */
   private def nbScored(s: SparkSession, dir: String): DataFrame =
-    graft.engine.SessionCaches.memo(nbCache, (s, dir))(
-      graft.engine.Engine.materialize(
-        TextOps.nbQualityScore(t(s, dir, "documents"), "doc_id", "text",
-          col("lang") === "en")))
+    graft.engine.Engine.materialize(
+      TextOps.nbQualityScore(t(s, dir, "documents"), "doc_id", "text",
+        col("lang") === "en"))
 
   def xQualityNb(s: SparkSession, dir: String): DataFrame =
     nbScored(s, dir).orderBy(col("doc_id"))
@@ -4504,7 +4431,7 @@ object ExtQueries {
   // ---------------------------------------------------------------------
   // Confusion matrix + precision/recall/F1 of the NB gate at its
   // natural threshold (score > 0), in exact ppm — ONE aggregate over
-  // the cached scored frame. F1 = 2TP*1e6 div (2TP+FP+FN) exactly.
+  // the scored frame. F1 = 2TP*1e6 div (2TP+FP+FN) exactly.
   // ---------------------------------------------------------------------
   def xQualityConfusion(s: SparkSession, dir: String): DataFrame = {
     val d = t(s, dir, "documents")
@@ -4558,7 +4485,7 @@ object ExtQueries {
   // deciles via the NTILE-exact window-free tile machinery, per-tile
   // positive rate in exact ppm — monotone pos_ppm across tiles is the
   // "ranking is informative" read, pos_ppm vs score the calibration
-  // read. Shares the cached scored frame with x_quality_nb/_auc.
+  // read. Same scored frame as x_quality_nb/_auc.
   // ---------------------------------------------------------------------
   def xQualityCalibration(s: SparkSession, dir: String): DataFrame = {
     val d = t(s, dir, "documents")
@@ -5237,14 +5164,6 @@ object ExtQueries {
   // corpus, the shape the operator has at any scale (the bounded-tier
   // convention of x_embed_mutual).
   // ---------------------------------------------------------------------
-  /** Collected benchmark vectors, cached per (session, dir) — the
-    * lmSumsCache discipline applied to xDecontamSemantic's driver
-    * collect (r17 advice: the collect was eager and uncached, so every
-    * invocation re-ran the benchmark scan). */
-  private val decontamBenchCache = graft.engine.SessionCaches.register(
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), Seq[(Long, Seq[Double])]]())
-
   def xDecontamSemantic(s: SparkSession, dir: String): DataFrame = {
     val emb = t(s, dir, "embeddings")
     // The benchmark is fixed-size by contract (~69 vectors) — collect
@@ -5255,12 +5174,10 @@ object ExtQueries {
     // kernel == join-form equivalence is pinned in NativeExprsSpec).
     val benchSel = emb
       .filter(col("vec_id") % 29 === 0 && col("vec_id") < 2000)
-    val bench = graft.engine.SessionCaches.memo(
-      decontamBenchCache, (s, dir))(
-      benchSel.select(col("vec_id"),
-          col("embedding").cast("array<double>").as("_v"))
-        .collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq)).toSeq)
+    val bench = benchSel.select(col("vec_id"),
+        col("embedding").cast("array<double>").as("_v"))
+      .collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq)).toSeq
     // An empty benchmark selection (possible on an exotic fixture
     // scale) takes the general join form, which returns the empty
     // screen instead of the literal form's loud refusal (r17 advice).

@@ -1,89 +1,54 @@
 package graft.engine
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** Central registry of the (session, fixture-dir)-keyed memo maps
-  * (ExtQueries' stagesCache/ccCache/fuzzyCache/bpeCache/lmSumsCache/…,
-  * TextOps' lmKeySums) plus the [[GrainProbe]] verdict map — so the
-  * DML sinks can INVALIDATE instead of documenting the staleness
-  * footgun (r17 verdict "what's wrong" #3 / ask #9: the caches are
-  * sound under the bench's immutable-input discipline, but this engine
-  * ships rewrite sinks, and a mid-session `Dml.update`/`delete` of a
-  * cached table must not serve stale frames).
+/** The engine's one session memo: [[GrainProbe]]'s tier verdict, keyed
+  * `(session, canonicalized probe plan)`. No relation is memoized
+  * across queries — every query recomputes its inputs — so the only
+  * thing a stale entry could affect is a PLAN SHAPE, and the row-grain
+  * and class-grain tiers it picks between are result-identical.
   *
-  * Contract: every cache that memoizes a relation derived from the
-  * fixture tables under some directory registers itself here, keyed
-  * `(session, dir)`. [[invalidate]] drops every entry whose dir
-  * contains the mutated path (and the session-wide GrainProbe verdicts
-  * — plan-keyed, so they cannot be mapped back to a dir). Dropping an
-  * entry never breaks an in-flight frame: values are checkpoint-backed
-  * DataFrames whose blocks the ContextCleaner releases only when
-  * unreferenced.
+  * The DML sinks still [[invalidate]] the session after a rewrite, so
+  * a re-probe sees the new data's duplication factor.
   */
 object SessionCaches {
 
-  private val registered = new java.util.concurrent.CopyOnWriteArrayList[
-    java.util.concurrent.ConcurrentHashMap[(SparkSession, String), _]]()
+  private val verdicts = new java.util.concurrent.ConcurrentHashMap[
+    (SparkSession, LogicalPlan), java.lang.Boolean]
 
-  // Observability for the bench artifact (r17 verdict ask #10): the
-  // FIRST consumer of a shared subtree pays its materialization inside
-  // its timed region, later consumers read it ~free — so per-query
-  // times understate standalone cost for warm readers. Bench snapshots
-  // these counters around each query and publishes which queries hit a
-  // warm entry vs which paid a fill.
+  // Bench and perfbench snapshot these around each query: `fills`
+  // counts verdicts probed and published, `hits` counts verdicts reused
+  // (or lost to a racing probe).
   private val fillsCtr = new java.util.concurrent.atomic.AtomicLong
   private val hitsCtr = new java.util.concurrent.atomic.AtomicLong
   def fills: Long = fillsCtr.get()
   def hits: Long = hitsCtr.get()
 
-  /** Memoize through a registered map, counting warm hits vs fills.
-    * The compute runs OUTSIDE any map lock (the GrainProbe argument:
-    * a fill is a multi-second Spark job; holding the bin lock would
-    * serialize unrelated fills). A lost race recomputes and discards —
-    * idempotent, the maps hold pure functions of immutable inputs. */
-  def memo[V](m: java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), V], k: (SparkSession, String))
-      (compute: => V): V = {
-    val hit = m.get(k)
-    if (hit != null) { hitsCtr.incrementAndGet(); hit }
+  /** The verdict for `(spark, plan)`, probing with `compute` on a miss.
+    * The probe runs OUTSIDE any map lock: it is a Spark job, and
+    * holding the bin lock would serialize unrelated probes. A lost race
+    * discards its own verdict — probes of one plan agree. */
+  def memo(spark: SparkSession, plan: LogicalPlan)
+      (compute: => Boolean): Boolean = {
+    // Unbounded growth guard: a long-lived session probing ever-new
+    // plans would otherwise pin them forever.
+    if (verdicts.size > 4096) verdicts.clear()
+    val k = (spark, plan)
+    val hit = verdicts.get(k)
+    if (hit != null) { hitsCtr.incrementAndGet(); hit.booleanValue() }
     else {
-      val v = compute
-      val prev = m.putIfAbsent(k, v)
-      if (prev != null) { hitsCtr.incrementAndGet(); prev }
-      else { fillsCtr.incrementAndGet(); v }
+      val v = java.lang.Boolean.valueOf(compute)
+      val prev = verdicts.putIfAbsent(k, v)
+      if (prev != null) { hitsCtr.incrementAndGet(); prev.booleanValue() }
+      else { fillsCtr.incrementAndGet(); v.booleanValue() }
     }
   }
 
-  /** Register a memo map; returns it so declarations stay one-liners. */
-  def register[V](m: java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), V])
-      : java.util.concurrent.ConcurrentHashMap[(SparkSession, String), V] = {
-    registered.add(m)
-    m
-  }
-
-  private def stripScheme(p: String): String =
-    if (p.startsWith("file:")) p.stripPrefix("file:") else p
-
-  /** Drop every cached entry of `spark` whose key dir contains
-    * `mutatedPath` (the table path a DML sink just rewrote), plus the
-    * session's GrainProbe verdicts. Safe to call concurrently with
-    * cache fills: worst case a racing fill re-reads the OLD files it
-    * already planned against — the same read-vs-write race any
-    * non-transactional table has, not a cache artifact. */
-  def invalidate(spark: SparkSession, mutatedPath: String): Unit = {
-    val p = stripScheme(mutatedPath)
-    registered.forEach { m =>
-      val it = m.keySet().iterator()
-      while (it.hasNext) {
-        val k = it.next()
-        if (k._1 eq spark) {
-          val d = stripScheme(k._2)
-          if (p == d || p.startsWith(d + "/") || d.startsWith(p + "/"))
-            it.remove()
-        }
-      }
-    }
-    GrainProbe.clearSession(spark)
+  /** Drop every verdict of `spark` — the DML sinks' hook after a table
+    * rewrite (plan-keyed entries cannot be mapped back to a table). */
+  def invalidate(spark: SparkSession): Unit = {
+    val it = verdicts.keySet().iterator()
+    while (it.hasNext) if (it.next()._1 eq spark) it.remove()
   }
 }

@@ -571,9 +571,8 @@ object DedupOps {
       .distinct()
     // Materialized: [[connectedComponents]]' contract is a
     // checkpoint-backed, lineage-free label frame, and consumers lean
-    // on it — incrementalComponents scans its history labels twice,
-    // the CC-family cache serves four queries — so the expansion joins
-    // must not replay per downstream action.
+    // on it — incrementalComponents scans its history labels twice —
+    // so the expansion joins must not replay per downstream action.
     graft.engine.Engine.materialize(st.classes
       .select(col("_rid").cast("long").as("_rid"),
         col("_oid").cast("long").as("_oid"))

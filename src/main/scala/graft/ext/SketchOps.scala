@@ -363,13 +363,15 @@ object SketchOps {
   /** Point-query a [[cmsSketch]] grid for each probe token: the
     * estimate is `min_j grid(j, hash_j(token))`. The grid side is
     * depth·width rows — broadcast; the probe side only ever carries
-    * the probe tokens. Missing cells read as 0 (token never seen). */
+    * the probe tokens. Missing cells read as 0 (token never seen); a
+    * null token hashes to no cell and also reads 0, keeping its row. */
   def cmsEstimate(sketch: DataFrame, probes: DataFrame,
                   tokenCol: String,
                   depth: Int = 4, width: Int = 64): DataFrame = {
     val probed = probes
       .select(col("*"),
-        posexplode(bloomPositionsArr(array(col(tokenCol)), width, depth))
+        posexplode_outer(
+          bloomPositionsArr(array(col(tokenCol)), width, depth))
           .as(Seq("j", "cell")))
     probed.join(broadcast(sketch), Seq("j", "cell"), "left")
       .groupBy(probes.columns.map(col): _*)

@@ -70,9 +70,9 @@ object Dml {
           affected = df.filter(cond).count())
         DmlFileStats(affected, -1, -1, -1)
     }
-    // The table changed on disk: drop every session memo derived from
-    // it (r17 verdict ask #9 — the caches were documented-stale before).
-    graft.engine.SessionCaches.invalidate(spark, tablePath)
+    // The table changed on disk: drop the session's tier verdicts so a
+    // re-probe sees its new duplication factor.
+    graft.engine.SessionCaches.invalidate(spark)
     stats
   }
 
@@ -94,7 +94,7 @@ object Dml {
           affected = df.filter(cond).count())
         DmlFileStats(affected, -1, -1, -1)
     }
-    graft.engine.SessionCaches.invalidate(spark, tablePath)
+    graft.engine.SessionCaches.invalidate(spark)
     stats
   }
 
@@ -367,7 +367,7 @@ object Dml {
         fTotal += allInDir.size
       }
     }
-    graft.engine.SessionCaches.invalidate(spark, tablePath)
+    graft.engine.SessionCaches.invalidate(spark)
     if (wholePartition) DmlFileStats(affected, fTotal, -1, -1)
     else DmlFileStats(affected, fTotal, fRewritten, fKept)
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.Functions
+import scala.util.control.NonFatal
 
 /** Schema/value sanitizers (SURVEY §2.7 W3-W6).
   *
@@ -109,7 +110,7 @@ object Sanitize {
       .toLong)
     val smallInput =
       try df.queryExecution.optimizedPlan.stats.sizeInBytes <= smallBytes
-      catch { case _: Throwable => false }
+      catch { case NonFatal(_) => false }
     if (smallInput) {
       val arr = df.agg(
         percentile(value.cast("double"),

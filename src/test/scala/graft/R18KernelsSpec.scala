@@ -88,33 +88,36 @@ class R18KernelsSpec extends SparkSpec {
     assert(fast.count() > 0)
   }
 
-  test("DML rewrite invalidates (session, dir) caches: a memo filled " +
-    "before Dml.update/delete is dropped, unrelated dirs survive") {
-    import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_dml_inv").toString
+  test("DML rewrite: readers see it, tier verdicts re-probe") {
+    import graft.engine.{GrainProbe, SessionCaches}
+    def tmp(p: String) =
+      java.nio.file.Files.createTempDirectory(p).toString
+    val dir = tmp("graft_dml_inv")
     val table = s"$dir/documents.parquet"
-    Seq((1L, "a"), (2L, "b")).toDF("doc_id", "text")
-      .write.mode("overwrite").parquet(table)
-    val cache = graft.engine.SessionCaches.register(
-      new java.util.concurrent.ConcurrentHashMap[
-        (org.apache.spark.sql.SparkSession, String), Long]())
-    // the fill reads the table; a stale entry would keep serving 2
-    def rowsMemo(): Long =
-      graft.engine.SessionCaches.memo(cache, (spark, dir))(
-        spark.read.parquet(table).count())
-    assert(rowsMemo() == 2L)
-    cache.put((spark, "/somewhere/else"), 99L)
-    sinks.Dml.delete(spark, table, col("doc_id") === 2L)
-    assert(!cache.containsKey((spark, dir)),
-      "delete must drop the memo keyed on the mutated table's dir")
-    assert(cache.containsKey((spark, "/somewhere/else")),
-      "unrelated dirs must survive invalidation")
-    assert(rowsMemo() == 1L, "refilled memo must see the rewrite")
+    docs.write.parquet(table)
+    def sizes(d: String) =
+      ExtQueries.xDedupClusterSizes(spark, d).collect().toSeq
+    val before = sizes(dir)
+    // drops 10 planted originals, and with them their +10000 clones
+    sinks.Dml.delete(spark, table, col("doc_id") < 10)
+    val after = sizes(dir)
+    assert(after != before, "second call must see the delete")
+    val ref = tmp("graft_dml_ref")
+    spark.read.parquet(table).write.parquet(s"$ref/documents.parquet")
+    assert(after == sizes(ref))
+
+    def probe(): Boolean =
+      GrainProbe.dupTier(spark.read.parquet(table), col("text"))
+    probe()
+    val (f0, h0) = (SessionCaches.fills, SessionCaches.hits)
+    probe()
+    assert(SessionCaches.fills == f0 && SessionCaches.hits == h0 + 1,
+      "a re-read of the same table reuses its verdict")
     sinks.Dml.update(spark, table,
-      Map("text" -> lit("z")), col("doc_id") === 1L)
-    assert(!cache.containsKey((spark, dir)),
-      "update must drop the memo too")
+      Map("text" -> lit("z")), col("doc_id") === 60L)
+    probe()
+    assert(SessionCaches.fills == f0 + 1,
+      "update must clear the session's verdicts")
   }
 
   test("connectedComponents: driver union-find tier == iterative " +

@@ -73,13 +73,19 @@ class SketchOpsSpec extends SparkSpec {
     val exact = docs
       .select(explode(graft.ext.TextOps.tokens(col("text"))).as("token"))
       .groupBy("token").agg(count(lit(1)).as("n_exact"))
+    import spark.implicits._
+    // a null-token probe keeps its row and reads 0
+    val nullProbe = Seq((null: String, 0L)).toDF("token", "n_exact")
     val probes = exact.orderBy(col("n_exact").desc, col("token")).limit(20)
+      .unionByName(nullProbe)
     val est = SketchOps.cmsEstimate(sketch, probes, "token").collect()
-    assert(est.length == 20)
+    assert(est.length == 21)
     est.foreach { r =>
       assert(r.getAs[Long]("cms_est") >= r.getAs[Long]("n_exact"),
         s"CMS undercounted ${r.getAs[String]("token")}")
     }
+    val nulls = est.filter(_.isNullAt(0))
+    assert(nulls.map(_.getAs[Long]("cms_est")).toSeq == Seq(0L))
   }
 
   test("cmsSketch: every depth row sums to the total token count") {
